@@ -150,6 +150,7 @@ def per_layer(result, failures):
         "session.first_calls_s": (median([r["first_calls_s"] for r in rounds]), "s"),
         "spark.codegen_s": (result["codegen_s"] / n, "s"),
         "spark.task_retries": (sum(c.get("task_retries", 0) for c in traced), "count"),
+        "jvm.jit_s": (sum(p.get("jit_s", 0.0) for p in result["passes"] if p["traced"]) / n, "s"),
         "dedup.kept_frac": (kept_frac(traced), "ratio"),
         "host.steal_s": (result["host"]["run"]["steal_s"], "s"),
         "host.other_cpu_s": (result["host"]["run"]["other_cpu_s"], "s"),

@@ -41,19 +41,20 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-import gen_data  # noqa: E402
 import metrics  # noqa: E402
 
 BUILD = os.path.join(ROOT, ".bench_build")
 WORKLOADS = ["dag", "curate"]
 DATA_SEED = 42
-# Three set-up rounds give set-up time as a median and call every op three
-# times before timing: with fewer, the first timed passes are still 10-20%
-# slower than the last (JIT). A run then times at least two passes. More
-# rounds or passes do not fit: the 48 runs a benchmark check makes, builds
-# included, must end within an hour.
-SETUP_ROUNDS = 3
-MIN_PASSES = 2
+# Two set-up rounds (the cold one and a warm one) give set-up time as their
+# median. Each costs 1.5-4 passes, so a third would leave too few timed
+# passes: the 48 runs a benchmark check makes, builds included, must end
+# within an hour. One untimed warm-up pass follows: the first pass after the
+# set-up rounds still ran 10-20% slower than the third (JIT). A run times
+# at least three passes, so that the median pass is never a mean of two.
+SETUP_ROUNDS = 2
+WARMUP_PASSES = 1
+MIN_PASSES = 3
 # A call gets at most OP_BUDGET_S, cut to what is left before the run's
 # deadline; no call starts after it, and an op that failed once is skipped
 # (and counted failed) for the rest of the run. So the harness ends within
@@ -152,6 +153,7 @@ def inputs():
     if not os.path.isdir(d):
         tmp = d + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
+        import gen_data  # numpy and pyarrow load only when the inputs are made
         gen_data.write(tmp, DATA_SEED)
         os.replace(tmp, d)
     return d
@@ -161,8 +163,7 @@ def jvm_command(classpath, cfg_path, run_dir, args):
     """The harness JVM: a fixed heap that is not pre-touched, with a fixed
     young generation, so peak RSS moves with what the program keeps rather
     than with G1's sizing; capped JIT-compiler and GC threads, so a burst of
-    compilation or collection takes a core, not every task slot; scaled JIT
-    thresholds, so a run's few calls per op reach compiled code."""
+    compilation or collection takes a core, not every task slot."""
     return (["java", f"-Xms{args.heap}", f"-Xmx{args.heap}", f"-Xmn{args.young}",
              "-XX:-UsePerfData",
              f"-XX:CICompilerCount={args.jit_threads}",
@@ -211,7 +212,8 @@ def harness_config(args, run_dir, **extra):
         "mode": "run", "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "slots": args.slots, "data": inputs(), "run_dir": run_dir,
         "out": os.path.join(run_dir, "result.json"), "budget_s": OP_BUDGET_S,
-        "deadline_s": HARNESS_DEADLINE_S, "setup_rounds": SETUP_ROUNDS, "min_passes": MIN_PASSES,
+        "deadline_s": HARNESS_DEADLINE_S, "setup_rounds": SETUP_ROUNDS,
+        "warmup_passes": WARMUP_PASSES, "min_passes": MIN_PASSES,
     }
     cfg.update(extra)
     return cfg
@@ -230,7 +232,7 @@ def parser():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--slots", type=int, default=3, help="Spark task slots (local[N])")
+    ap.add_argument("--slots", type=int, default=2, help="Spark task slots (local[N])")
     ap.add_argument("--heap", default="2g")
     ap.add_argument("--young", default="256m")
     ap.add_argument("--jit-threads", type=int, default=2)

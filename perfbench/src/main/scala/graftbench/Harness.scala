@@ -15,12 +15,13 @@ import scala.jdk.CollectionConverters._
   *     of its own: the workload's one-time ingest, then the first call of
   *     every op with its output digest (the correctness check). The run's
   *     set-up time is session start plus the median round;
-  *  3. timed passes in the last round's database: each pass calls every op once, in an order that
+  *  3. `warmup_passes` untimed passes, then timed passes, in the last
+  *     round's database: each pass calls every op once, in an order that
   *     respects the ops' dependencies, drawn from the seed; a further pass
-  *     starts only while it is expected to end within `seconds`, after at
-  *     least `min_passes` passes. A timed call is the op's own call into
-  *     the program, plus a write of a lazy result to Spark's `noop` sink,
-  *     so every output column is computed.
+  *     starts while it is expected to end less than half a pass past
+  *     `seconds`, after at least `min_passes` passes. A timed call is the
+  *     op's own call into the program, plus a write of a lazy result to
+  *     Spark's `noop` sink, so every output column is computed.
   *
   * With `trace` on, the middle two passes of every four attach a read-only
   * [[Tracer]] and record each call's layer costs; the outer two give the
@@ -230,6 +231,14 @@ object Harness {
     }
     val rng = new scala.util.Random(cfg.get("seed").asLong())
     val readyS = secs(t0)
+    // untimed warm-up passes: after the set-up rounds the JIT is still
+    // compiling, and the first pass ran 10-20% slower than the third. Their
+    // calls are not recorded; an op that fails here fails every timed call.
+    (1 to cfg.path("warmup_passes").asInt(0)).foreach { k =>
+      Workloads.order(w.ops, rng).foreach { op =>
+        call(op.name, s"w$k-${op.name}")(finish(op.run(ctx)))
+      }
+    }
 
     val tracer = new Tracer
     val calls = new java.util.ArrayList[Any]()
@@ -243,8 +252,10 @@ object Harness {
     // across passes cancels out of the tracer's overhead. Past the deadline
     // the minimum passes still run, every call skipped.
     val minPasses = if (trace) 4 else cfg.get("min_passes").asInt()
+    // a further pass starts while it is expected to end less than half a
+    // pass past `seconds`, so the timed phase lasts `seconds` on average
     def more: Boolean = pass < minPasses || (trace && pass % 4 != 0) ||
-      (System.nanoTime() < deadline && secs(m0) + lastPassS <= cfg.get("seconds").asDouble())
+      (System.nanoTime() < deadline && secs(m0) + lastPassS / 2 <= cfg.get("seconds").asDouble())
     while (more) {
       val traced = trace && (pass % 4 == 1 || pass % 4 == 2)
       if (traced) {
@@ -252,6 +263,8 @@ object Harness {
         spark.listenerManager.register(tracer)
       }
       val cg0 = BenchAccess.codegenNanos
+      val jit0 = HostStats.jitSeconds()
+      val steal0 = HostStats.read().steal
       val p0 = System.nanoTime()
       var bookkeepingNs = 0L
       Workloads.order(w.ops, rng).foreach { op =>
@@ -286,7 +299,9 @@ object Harness {
         spark.listenerManager.unregister(tracer)
         spark.sparkContext.removeSparkListener(tracer)
       }
-      passes.add(J.obj("pass" -> pass, "traced" -> traced, "s" -> passS))
+      passes.add(J.obj("pass" -> pass, "traced" -> traced, "s" -> passS,
+        "jit_s" -> (HostStats.jitSeconds() - jit0),
+        "steal_s" -> (HostStats.read().steal - steal0) / HostStats.Hz))
       pass += 1
     }
     val measureS = secs(m0)
@@ -344,6 +359,10 @@ object HostStats {
     val load = read("/proc/loadavg").split(' ').headOption.flatMap(_.toDoubleOption).getOrElse(0.0)
     HostStats(f(7), busy, self, load)
   }
+
+  /** Time the JIT compilers have spent so far, in seconds. */
+  def jitSeconds(): Double =
+    java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
 
   def peakRssMb(): Double =
     read("/proc/self/status").linesIterator.find(_.startsWith("VmHWM:"))
