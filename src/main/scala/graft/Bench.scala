@@ -64,18 +64,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_BUDGET_SEC", "120").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    ops.TableIO.quietKnownLogNoise()
-    ops.TableIO.sweepOrphanTemps(spark)
+    val spark = MainSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // escape backslash, quote, and ALL control chars (<0x20) — an exception
     // message carrying a stray \f or ESC byte must not make the one stdout
     // JSON line unparseable (that would recreate the round-4 no-numbers

@@ -3383,11 +3383,10 @@ object SparkEntry {
       // query batch ∝ corpus (every 17th row) ⇒ a broadcast build relation
       // would grow with N (cache-miss trap, SCALE.md round 14); default is
       // the cell-shuffle pairing (measured 1.8–2.2× faster at sf30, slope
-      // 3.3→2.5); GRAFT_IVF_JOIN=broadcast keeps the bounded-batch dial
-      // measurable on one HEAD (the GRAFT_CAP_IMPL pattern)
+      // 3.3→2.5)
       Ann.ivfTopK(e, queries, "vec_id", "embedding", "qid", "embedding",
           k = 10, numCentroids = c, nprobe = 2, codec = "sq8",
-          candidateJoin = sys.env.getOrElse("GRAFT_IVF_JOIN", "shuffle"))
+          candidateJoin = "shuffle")
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
     }),
@@ -3409,9 +3408,8 @@ object SparkEntry {
     // evidence: q193's oracle-checked recall gate (exact dial, hash-parity
     // with q183's) + AnnIndexSpec's at-rest/in-flight agreement pin; this
     // slot's job is the slope. The query side keeps the round-14 rule
-    // (never force a data-proportional broadcast): candidateJoin defaults
-    // to "shuffle" here, GRAFT_IVF_JOIN=broadcast keeps the alternative
-    // measurable on one HEAD.
+    // (never force a data-proportional broadcast): candidateJoin is
+    // "shuffle" here.
     //
     // Round 16 (VERDICT r15 tasks 3 + ADVICE): (a) the query batch is now
     // PRE-ASSIGNED at its own ingest (Ann.assignToIndex persisted bucketed
@@ -3445,7 +3443,7 @@ object SparkEntry {
         writeStamp(s, stamp, fp)
       }
       Ann.queryIvfIndexAssigned(s, idx, s.table(qas.qualifiedName), k = 10,
-          candidateJoin = sys.env.getOrElse("GRAFT_IVF_JOIN", "shuffle"),
+          candidateJoin = "shuffle",
           fitTable = Some(fit))
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
@@ -3502,7 +3500,7 @@ object SparkEntry {
         .select(col("vec_id").as("qid"), col("embedding"))
       Ann.mmrRerankIvf(e, queries, "vec_id", "embedding", "qid", "embedding",
         candidateK = 20, k = 5, lambda = 0.7, numCentroids = c, nprobe = 2,
-        candidateJoin = sys.env.getOrElse("GRAFT_IVF_JOIN", "shuffle"))
+        candidateJoin = "shuffle")
     }),
 
     // per-group percentile trim, NO-SORT production dial — the

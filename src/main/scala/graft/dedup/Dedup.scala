@@ -153,54 +153,70 @@ object Dedup {
     * shared by every blocking family (LSH bands, winnow fingerprints,
     * SimHash chunks, SRP tables, SemDeDup cells).
     *
-    * ==Default: count-over-window (round 13 — round 12's rewrite reverted)==
+    * ==Why count-over-window (round 13 — round 12's rewrite reverted)==
     * Round 12 replaced this window with an aggregate-count + left-anti
     * join, diagnosing the char-ngram dial's sf30 super-linearity as the
     * window sorting the hottest bucket into one task. The round-13
-    * adjudication (both impls on one HEAD via `GRAFT_CAP_IMPL`, nine
-    * slots covering all six blocking families, sf1 + sf10 + sf30 probes)
-    * showed that diagnosis was a MISATTRIBUTION: the super-linear cost
-    * was the unfiltered verify volume (fixed by the length filter in
-    * [[verifyPairs]]), and with it gone the window wins at every
-    * measured scale for every family — sf10 totals 397.7 s (window) vs
-    * 918.6 s (anti-join); sf30 char-ngram 24.7 s vs 29.7 s, word-shingle
-    * 59.8 s vs 98.7 s. The anti-join's price is structural: the blocking
-    * relation is consumed twice (count pass + probe), so its upstream —
-    * image decode for perceptual hashes, fingerprinting for winnow —
-    * runs twice, and for near-unique keys (winnow) the "thin" count
-    * shuffle is as wide as the relation itself; a localCheckpoint pin
-    * traded recompute for a write of the exploded relation and measured
-    * worse still on winnow (352 s vs window's 53 s at sf10).
-    *
-    * ==The dial==
-    * `GRAFT_CAP_IMPL=antijoin` keeps the round-12 shape available: ONE
-    * scenario still favors it — a corpus whose hottest bucket alone
-    * (≳10⁸ rows of one key) overwhelms a single sort task; there AQE can
-    * skew-split the anti join, which a window cannot. Both impls are
-    * row-identical (null-key groups included — the anti-join matches on
-    * null-safe equality `<=>` so an oversized NULL bucket drops exactly
-    * like the window drops it), pinned by the oracle suite either way.
+    * adjudication (both impls on one HEAD, nine slots covering all six
+    * blocking families, sf1 + sf10 + sf30 probes) showed that diagnosis
+    * was a MISATTRIBUTION: the super-linear cost was the unfiltered
+    * verify volume (fixed by the length filter in [[verifyPairs]]), and
+    * with it gone the window wins at every measured scale for every
+    * family — sf10 totals 397.7 s (window) vs 918.6 s (anti-join); sf30
+    * char-ngram 24.7 s vs 29.7 s, word-shingle 59.8 s vs 98.7 s. The
+    * anti-join's price is structural: the blocking relation is consumed
+    * twice (count pass + probe), so its upstream — image decode for
+    * perceptual hashes, fingerprinting for winnow — runs twice, and for
+    * near-unique keys (winnow) the "thin" count shuffle is as wide as the
+    * relation itself; a localCheckpoint pin traded recompute for a write
+    * of the exploded relation and measured worse still on winnow (352 s
+    * vs window's 53 s at sf10). The anti-join was deleted after that
+    * adjudication. Known limit: a single bucket of ≳10⁸ rows sorts in one
+    * task, which AQE could skew-split in an anti-join but not in a window.
     */
+  private[dedup] def dropOversized(df: DataFrame, cap: Int, minSize: Int, keys: String*): DataFrame =
+    // `minSize = 2` (round 16, scoped per call site in round 17 —
+    // ADVICE r16): consumers that enumerate WITHIN-relation pairs pass
+    // 2, because a single-member bucket can produce no pair — dropping
+    // singletons is output-free for THEM and removes the overwhelming
+    // majority of rows on sparse-bucket dials (r=4 production banding,
+    // winnow fingerprints), which keeps the inrow pair aggregate in
+    // hash mode (ObjectHashAggregate falls back to sort-based past its
+    // key threshold) and shrinks the join strategy's probe input
+    // identically. Consumers whose capped relation joins an EXTERNAL
+    // side (similarTextTopK: corpus bands vs uncapped query bands — a
+    // corpus doc alone in its bucket can still match a query) pass 1.
+    df.withColumn("__bsz",
+        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .where(col("__bsz") <= cap && col("__bsz") >= minSize).drop("__bsz")
+
   /** Ordered within-bucket candidate-pair enumeration over a cap-bounded
     * blocking relation — the step every blocking family shares after
     * [[dropOversized]]. `member` must be a struct whose FIRST field is the
     * id. Output rows carry the two member structs as (__a, __b) with
     * __a.id < __b.id; the caller applies its verify filter and dedup.
     *
-    * Two row-identical strategies, switchable like `GRAFT_CAP_IMPL`
-    * (round 16 — measured A/B on this host before picking the default):
-    *  - "inrow": collect each bucket's members (bounded by the cap) on
-    *    the cap window's own hash partitioning — no new exchange — and
-    *    stream ordered pairs out of two Generate steps. ONE execution of
-    *    the upstream blocking pipeline.
+    * Two strategies, chosen per call site from its input by a measured
+    * A/B (round 16):
+    *  - "inrow" (default): collect each bucket's members (bounded by the
+    *    cap) on the cap window's own hash partitioning — no new exchange —
+    *    and stream ordered pairs out of two Generate steps. ONE execution
+    *    of the upstream blocking pipeline.
     *  - "join": the classic self-join on the bucket keys. The upstream
     *    pipeline (shingle/minhash/banding, or the codec+hash pass for
     *    perceptual families) executes once per join side and its explode
-    *    exchanges once per side.
+    *    exchanges once per side. [[substringDupPairs]] picks it for winnow
+    *    fingerprints (`winnowWindow > 1`).
+    *
+    * Both give the same pairs on non-null keys (EnumeratePairsSpec). Keys
+    * must be non-null: join never matches a null key, while inrow groups a
+    * null-key bucket like any other and pairs its members. Every caller's
+    * keys are non-null — band positions and bucket hashes, window hashes,
+    * and hash chunks ([[hash64Chunks]] drops null hashes).
     */
-  private def enumeratePairs(capped: DataFrame, keys: Seq[String], member: Column,
-      defaultImpl: String = "inrow"): DataFrame =
-    sys.env.getOrElse("GRAFT_PAIR_IMPL", defaultImpl) match {
+  private[dedup] def enumeratePairs(capped: DataFrame, keys: Seq[String], member: Column,
+      impl: String = "inrow"): DataFrame =
+    impl match {
       case "join" =>
         val a = capped.select(keys.map(col) :+ member.as("__a"): _*)
         val b = capped.select(keys.map(col) :+ member.as("__b"): _*)
@@ -214,34 +230,6 @@ object Dedup {
           .select(col("__a"),
             explode(slice(col("__m"), col("__i") + lit(2), size(col("__m")))).as("__b"))
           .where(col("__a.id") < col("__b.id"))
-    }
-
-  private def dropOversized(df: DataFrame, cap: Int, minSize: Int, keys: String*): DataFrame =
-    sys.env.getOrElse("GRAFT_CAP_IMPL", "window") match {
-      case "antijoin" =>
-        val over = df.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__bsz"))
-          .where(col("__bsz") > cap)
-          .select(keys.map(k => col(k).as(s"__over_$k")): _*)
-        val cond = keys.map(k => col(k) <=> col(s"__over_$k")).reduce(_ && _)
-        df.join(over, cond, "left_anti")
-      case _ =>
-        // `minSize = 2` (round 16, scoped per call site in round 17 —
-        // ADVICE r16): consumers that enumerate WITHIN-relation pairs pass
-        // 2, because a single-member bucket can produce no pair — dropping
-        // singletons is output-free for THEM and removes the overwhelming
-        // majority of rows on sparse-bucket dials (r=4 production banding,
-        // winnow fingerprints), which keeps the inrow pair aggregate in
-        // hash mode (ObjectHashAggregate falls back to sort-based past its
-        // key threshold) and shrinks the join strategy's probe input
-        // identically. Consumers whose capped relation joins an EXTERNAL
-        // side (similarTextTopK: corpus bands vs uncapped query bands — a
-        // corpus doc alone in its bucket can still match a query) pass 1.
-        // (The legacy antijoin cap dial above keeps its over-cap-only
-        // contract either way.)
-        df.withColumn("__bsz",
-            count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-          .where(col("__bsz") <= cap && col("__bsz") >= minSize).drop("__bsz")
     }
 
   /** Shared LSH tail: cap bucket sizes, self-join ids within (band, bucket),
@@ -271,7 +259,6 @@ object Dedup {
       bands: Int,
       threshold: Double,
       maxBucketSize: Int,
-      pairImpl: String = "inrow",
   ): DataFrame = {
     val capped = dropOversized(bandedSized(sets, numHashes, bands),
       maxBucketSize, 2, "band", "bucket")
@@ -279,7 +266,7 @@ object Dedup {
     // the PPJoin length filter evaluated on the pair row BEFORE the dedup
     // shuffle — set sizes ride the band explode as one int either way.
     val candidates = enumeratePairs(capped, Seq("band", "bucket"),
-        struct(col("id"), col("n")), pairImpl)
+        struct(col("id"), col("n")))
       .where(least(col("__a.n"), col("__b.n")) >=
         greatest(col("__a.n"), col("__b.n")) * threshold)
       .select(col("__a.id").as("id_a"), col("__b.id").as("id_b"))
@@ -1038,9 +1025,8 @@ object Dedup {
     // shuffle to the survivors only. Pair enumeration via
     // [[enumeratePairs]] (round 16): on the inrow strategy the hash/chunk
     // pipeline — for perceptual families, the image/audio decode pass —
-    // executes once instead of once per join side. (Null-hash rows: the
-    // inrow strategy groups them and the null hamming filter drops their
-    // pairs; the join strategy never matches null keys — same output.)
+    // executes once instead of once per join side. (Null-hash rows never
+    // get here: hash64Chunks drops them.)
     enumeratePairs(capped, Seq("chunk", "val"), struct(col("id"), col("sim")))
       .withColumn("hamming",
         call_function("bit_count", col("__a.sim").bitwiseXOR(col("__b.sim"))))

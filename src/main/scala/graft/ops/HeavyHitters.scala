@@ -147,7 +147,7 @@ object HeavyHitters {
     // Two-stage projection ON PURPOSE: the gram expression references the
     // token array 3× (two size()s + slice), and inlining the regex split
     // into each reference re-tokenizes every document 3× — measured 10×
-    // slower at sf0.1 (ProfileHH). Materializing the array under an alias
+    // slower at sf0.1. Materializing the array under an alias
     // keeps one split per row; CollapseProject leaves multi-referenced
     // non-cheap producers staged, so the plan stays two projections.
     val staged = df.select(TextFunctions.tokens(lower(col(textCol))).as("__toks"))

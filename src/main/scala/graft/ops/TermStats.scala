@@ -77,7 +77,7 @@ object TermStats {
     * with `N`/`avgdl` over ALL corpus docs (empty docs count toward both;
     * they can never match). Query terms are de-duplicated; ranking
     * tie-breaks deterministically (score DESC, doc id DESC — the
-    * [[graft.similarity.TopKAggregator]] order).
+    * [[graft.functions.TopKAgg]] order).
     *
     * Scale shape: the probe vocabulary (distinct query terms — tiny)
     * broadcasts and filters the exploded token stream BEFORE any shuffle,

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The candidateJoin strategies are PLAN alternatives, not semantic ones:
   * shuffle-by-cell and broadcast-hash pair the exact same (query, corpus)
   * candidates, so the scored top-k must agree wherever cosine scores are
-  * untied. Round 14 — adjudicated on one HEAD via GRAFT_IVF_JOIN (the
-  * GRAFT_CAP_IMPL pattern); see SCALE.md round 14 for the measurements.
+  * untied. Round 14 adjudicated them on one HEAD (shuffle won); see
+  * SCALE.md round 14 for the measurements.
   */
 class IvfJoinStrategySpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"

@@ -1,6 +1,5 @@
 package graft
 
-import graft.similarity.TopKAggregator
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
