@@ -83,22 +83,23 @@ object Bench {
     // CONSTRUCTION (they exist to give an approximate operator a bit-exact
     // oracle) run only at the oracle SF band (<= 0.1); above it they are
     // skipped LOUDLY (pinned_skipped in the JSON) and the production-dial
-    // twins in SparkEntry.benchOnly — which run at every SF — carry the
-    // slope story instead. SF parses from the dir name's trailing sf<N>.
+    // twins (the slots without an oracle) — which run at every SF — carry
+    // the slope story instead. SF parses from the dir name's trailing sf<N>.
     val sf = "sf([0-9.]+)/?$".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
     val pinnedSkipped =
-      if (sf > 0.105) SparkEntry.exactDialPinnedToOracleSf else Set.empty[String]
+      if (sf > 0.105) SparkEntry.slots.filter(_.pinnedToOracleSf).map(_.name).toSet
+      else Set.empty[String]
     pinnedSkipped.foreach(n =>
       System.err.println(s"[bench] $n pinned to the oracle SF (exact dial), skipped at sf=$sf"))
     // SPARK_GRAFT_SLOT_FILTER=<regex>: run only matching slots — the
-    // third-decade probe sweeps the 12 benchOnly twins + the documented
+    // third-decade probe sweeps the 12 bench-only twins + the documented
     // cost-step (q162) as a committed artifact instead of RunOne prose
     // (round-13, VERDICT r12 task 5). The filter is honest in the output:
     // a filtered artifact lists only the slots it ran.
     val slotFilter = sys.env.get("SPARK_GRAFT_SLOT_FILTER").map(_.r)
-    val sorted = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => pinnedSkipped.contains(n) }
-      .filter { case (n, _) => slotFilter.forall(_.findFirstIn(n).isDefined) }
+    val sorted = SparkEntry.slots.sortBy(_.name)
+      .filterNot(slot => pinnedSkipped.contains(slot.name))
+      .filter(slot => slotFilter.forall(_.findFirstIn(slot.name).isDefined))
     // Warmth protocol (round 15 — VERDICT r14 task 3). The round-14
     // adjudication showed protocol length is part of the measurement: a
     // slot measured after ~45 min of 196-slot JIT/cache warmth reads up to
@@ -115,8 +116,8 @@ object Bench {
       .filter(d => new java.io.File(d).isDirectory)
     val warmupDir = "/root/testdata/sf0.001"
     if (perSlotWarmDir.isEmpty && new java.io.File(warmupDir).isDirectory && warmupDir != sfDir)
-      sorted.foreach { case (name, fn) =>
-        withBudget(spark, s"warmup-$name", budgetSec)(fn(spark, warmupDir).count())
+      sorted.foreach { slot =>
+        withBudget(spark, s"warmup-${slot.name}", budgetSec)(slot.run(spark, warmupDir).count())
       }
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
@@ -125,11 +126,13 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
     for (pass <- 1 to runs) {
-      sorted.foreach { case (name, fn) =>
+      sorted.foreach { slot =>
+        val name = slot.name
+        val fn   = slot.run
         // ingest-bearing at-rest slots are exempt from skip-repeat: their
         // pass 1 may carry one-time index ingest, and skipping pass 2 would
         // book that ingest-inclusive time as the steady state (ADVICE r15)
-        if (pass > 1 && !SparkEntry.ingestBearing.contains(name) &&
+        if (pass > 1 && !slot.ingestOnFirstPass &&
             best.get(name).exists(t => t >= skipRepeatSec)) {
           System.err.println(f"[bench] p$pass $name%-28s skipped (>${skipRepeatSec}%.0fs on an earlier pass)")
         } else {
@@ -164,7 +167,7 @@ object Bench {
         }
       }
     }
-    val results = sorted.map { case (name, _) => name -> best.getOrElse(name, -1.0) }
+    val results = sorted.map(slot => slot.name -> best.getOrElse(slot.name, -1.0))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

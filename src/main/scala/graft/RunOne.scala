@@ -28,7 +28,7 @@ object RunOne {
     val spark = MainSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     val failed = names.filterNot { name =>
       try {
-        val fn = SparkEntry.queries.getOrElse(name, SparkEntry.benchOnly(name))
+        val fn = SparkEntry.slot(name).run
         val times = (1 to reps).map { r =>
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)

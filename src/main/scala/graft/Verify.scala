@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: the result of each SparkEntry slot that has an oracle
+  * → parquet, plus oracle_sql.json, for the DuckDB compare
+  * (tools/compare_oracle.py).
   *
   * Failure honesty: a query that throws leaves an explicit
   * `<name>.error.txt` marker and an entry in `errors.json` — broken queries
@@ -32,10 +33,12 @@ object Verify {
       case c => c.toString
     } + "\""
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(p => filter(p._1)).foreach { case (name, fn) =>
+    val checked = SparkEntry.slots.filter(_.oracle.isDefined).sortBy(_.name)
+    checked.filter(slot => filter(slot.name)).foreach { slot =>
+      val name = slot.name
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        slot.run(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
@@ -49,8 +52,8 @@ object Verify {
     }
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = checked
+      .map(slot => s"${q(slot.name)}: ${q(slot.oracle.get)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} FAILED queries: ${errors.keys.mkString(", ")}")

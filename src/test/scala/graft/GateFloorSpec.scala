@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   */
 class GateFloorSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-  private def gate(name: String) = SparkEntry.queries(name)(spark, sfDir)
+  private def gate(name: String) = SparkEntry.slot(name).run(spark, sfDir)
 
   // Round-15 gate audit (VERDICT r14 task 5) — which gates need a floor:
   // a gate can degrade SILENTLY only when the oracle measures a Spark-side

@@ -16,8 +16,8 @@ object SharedSpark {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/root/repo/target/test-warehouse-${java.util.UUID.randomUUID().toString.take(8)}")
+      .config("spark.sql.warehouse.dir", new java.io.File(
+        s"target/test-warehouse-${java.util.UUID.randomUUID().toString.take(8)}").getAbsolutePath)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
@@ -27,8 +27,12 @@ object SharedSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
+  /** A fresh dir under the checkout's `target/test-tmp` (forked tests run
+    * from the project root, so relative paths resolve inside this checkout).
+    */
   def tmpDir(): String = {
-    val d = s"/root/repo/target/test-tmp/${java.util.UUID.randomUUID().toString.take(12)}"
+    val d = new java.io.File(
+      s"target/test-tmp/${java.util.UUID.randomUUID().toString.take(12)}").getAbsolutePath
     new java.io.File(d).mkdirs()
     d
   }

@@ -17,8 +17,8 @@ Round-12 additions (VERDICT r11 tasks 2 and 7, ADVICE r11):
   - --budget X (default 12) turns the slope table into a checked
     contract: exit 1 if any slot's sf1->sf10 slope exceeds X. Slots that
     are super-linear by construction must be pinned to the oracle SF
-    (SparkEntry.exactDialPinnedToOracleSf) — then they simply don't
-    appear above sf0.1 — or output-bounded and re-dialed. The q51/q55
+    (`pinnedToOracleSf = true` on their SparkEntry Slot) — then they
+    simply don't appear above sf0.1 — or output-bounded and re-dialed. The q51/q55
     class gets caught mechanically at commit time, not by the judge.
 
 Round-14 addition (VERDICT r13 task 1 adjudication): --sf10twins takes a
@@ -208,7 +208,7 @@ def main(argv):
               f"{budget30:g}x at 3x data):", file=sys.stderr)
         for n, s, cap, decade in over:
             print(f"  {n}: {s:.1f}x {decade} (cap {cap:g}x) — pin it to the "
-                  "oracle SF (exactDialPinnedToOracleSf) or re-dial it linear",
+                  "oracle SF (pinnedToOracleSf on its Slot) or re-dial it linear",
                   file=sys.stderr)
         return 1
     if den_missing:

@@ -118,9 +118,10 @@ for st in "${STAGES[@]}"; do
         sbt -batch "runMain graft.Bench" > /tmp/sweep_sf10twins.log 2>&1
       tail -2 /tmp/sweep_sf10twins.log ;;
     sf30)
-      # Third-decade probe (round 13): only the benchOnly production
-      # twins, the documented cost-step (q162) and the round-12 pack-fix
-      # family (q131/q132) — the slots whose slope story carries above the
+      # Third-decade probe (round 13): only the bench-only production
+      # twins (SparkEntry slots with `oracle = None`), the documented
+      # cost-step (q162) and the round-12 pack-fix family (q131/q132) —
+      # the slots whose slope story carries above the
       # full-sweep decades — as a committed artifact instead of RunOne prose.
       # Warm-up at sf1: C2 warmth is invocation-count-bound, not
       # bytes-bound, and an sf10 warm-up would double the stage.
